@@ -5,7 +5,7 @@ import java.nio.file.{Path, Paths}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Pins, Tables}
 
 /** Persisted, BUCKETED LSH band index — the structure that makes
   * incremental near-dup detection O(batch) instead of O(corpus).
@@ -59,12 +59,6 @@ import graft.core.Tables
   */
 object BandIndex {
 
-  /** Deployment-tunable ([[IndexCommit.numBuckets]]); default = the
-    * engine's shuffle-partition count at bench scale, so the batch side
-    * shuffles into exactly the index's layout.
-    */
-  def NumBuckets: Int = IndexCommit.numBuckets
-
   def indexRoot: String = IndexCommit.indexRoot
 
   /** One index (table name + directory) per corpus directory. */
@@ -73,6 +67,11 @@ object BandIndex {
 
   private def indexPath(dir: String): Path =
     Paths.get(indexRoot, tableNameFor(dir))
+
+  /** Bucketed by the probe join's exact keys. */
+  private val layout = BucketedIndex(
+    "hist_id BIGINT, band_idx INT, band_key STRING",
+    Seq("band_idx", "band_key"), Seq("band_idx", "band_key"), Nil)
 
   /** File-metadata fingerprint of `documents.parquet` under `dir` (file
     * or directory of part files): no data scan, invalidates on any
@@ -102,100 +101,43 @@ object BandIndex {
   private[operators] def bandsOfDocs(d: DataFrame): DataFrame =
     Dedup.bandsOf(Dedup.shingleIndexOf(d).select("doc_id", "sh"))
 
+  /** The index rows (hist_id, band_idx, band_key) of band rows. */
+  private def indexRows(bands: DataFrame): DataFrame =
+    bands.select(col("doc_id").as("hist_id"), col("band_idx"), col("band_key"))
+
   /** Build the bucketed index over `histDocs` (doc_id, text) at `path`,
-    * registered as `name`. The pre-write `repartition` on the bucket
-    * columns uses the same hash the bucketed writer assigns files by, so
-    * each task lands ~one bucket file instead of up to [[NumBuckets]]
-    * files per task.
+    * registered as `name`.
     */
   def buildIndex(spark: SparkSession, histDocs: DataFrame, name: String,
       path: Path): Unit =
-    writeIndexRows(spark,
-      bandsOfDocs(histDocs)
-        .select(col("doc_id").as("hist_id"), col("band_idx"), col("band_key")),
-      name, path)
-
-  private def writeIndexRows(spark: SparkSession, rows: DataFrame,
-      name: String, path: Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    IndexCommit.deleteTree(path)
-    rows
-      .repartition(NumBuckets, col("band_idx"), col("band_key"))
-      .write.format("parquet")
-      .bucketBy(NumBuckets, "band_idx", "band_key")
-      .sortBy("band_idx", "band_key")
-      .option("path", path.toString)
-      .saveAsTable(name)
-  }
+    layout.write(spark, indexRows(bandsOfDocs(histDocs)), name, path)
 
   /** Fold away duplicate band rows (legitimately accrued by
     * crash-replayed appends — the index is at-least-once storage with
     * distinct-count read semantics, so duplicates never change answers;
-    * they only cost scan bytes). The rewrite goes through
-    * [[IndexCommit.commitBuild]]: distinct rows eagerly pinned off the
-    * table's files, written into a temp sibling WITH the preserved
-    * fingerprint sidecar, published by one rename — a crash
-    * mid-compaction leaves the original index intact instead of
-    * destroying it (an IngestDedupSink-managed index has no
-    * fingerprint-gated rebuild path to recover through). OWNER-ONLY,
-    * between batches: an append racing the rewrite would be silently
-    * lost — see [[FpIndex.compact]]'s single-writer contract, which
-    * this compact shares. Compaction changes the layout, not which
-    * corpus the index covers. Returns (rows before, after).
+    * they only cost scan bytes). An IngestDedupSink-managed index has
+    * no fingerprint-gated rebuild path, so the rewrite is
+    * [[BucketedIndex.compact]]'s crash-safe one. Returns (rows before,
+    * after).
     */
-  def compact(spark: SparkSession, name: String, path: Path): (Long, Long) = {
-    // sink-managed indexes are marker-less until first compaction —
-    // synthesize the sink-history identity (and ADOPT the live tree so
-    // the retiree it is about to create self-validates) so the rewrite
-    // goes through the marker-bound retire-then-publish tail, never
-    // commitBuild's marker-less delete-in-place branch (see
-    // [[FpIndex.compact]])
-    val fp = IndexCommit.readFp(path).getOrElse {
-      val f = IndexCommit.sinkHistoryFp(name)
-      IndexCommit.adoptUnmarked(path, f)
-      f
-    }
-    val before = spark.table(name).count()
-    val rows = spark.table(name).distinct().localCheckpoint(true)
-    IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-      writeIndexRows(spark, rows, tn, tp)
-    }
-    register(spark, name, path)
-    (before, spark.table(name).count())
-  }
+  def compact(spark: SparkSession, name: String, path: Path): (Long, Long) =
+    layout.compact(spark, name, path)
 
   /** Post-crash recovery for a SINK-MANAGED band index
-    * ([[graft.streaming.IngestDedupSink]]'s restart path) — restore a
-    * crash-stranded retiree over an unbound destination, then
-    * re-register; loud error when nothing adoptable survives. The
-    * policy body is [[IndexCommit.recoverSink]], SHARED with
-    * [[FpIndex.recover]] — see its doc for the adoptability rule.
+    * ([[graft.streaming.IngestDedupSink]]'s restart path) —
+    * [[BucketedIndex.recover]].
     */
-  def recover(spark: SparkSession, name: String, path: Path): Boolean = {
-    val restored = IndexCommit.recoverSink(path)
-    register(spark, name, path)
-    restored
-  }
+  def recover(spark: SparkSession, name: String, path: Path): Boolean =
+    layout.recover(spark, name, path)
 
-  /** Register an existing on-disk index (written by [[buildIndex]], so
-    * the files carry the bucketed writer's bucket-id naming) into this
-    * session's catalog — the post-JVM-restart path.
+  /** Register an existing on-disk index into this session's catalog —
+    * the post-JVM-restart path.
     */
   private[operators] def register(spark: SparkSession, name: String,
-      path: Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    spark.sql(
-      s"""CREATE TABLE `$name` (hist_id BIGINT, band_idx INT, band_key STRING)
-         |USING PARQUET
-         |CLUSTERED BY (band_idx, band_key) SORTED BY (band_idx, band_key) INTO $NumBuckets BUCKETS
-         |LOCATION '${path.toString}'""".stripMargin)
-  }
+      path: Path): Unit =
+    layout.register(spark, name, path)
 
-  /** Append an admitted batch's bands to the index. `mode("append")
-    * .bucketBy` on the existing table validates the spec matches and
-    * writes bucket-id-named files, so subsequent probes still read the
-    * table bucketed.
-    */
+  /** Append an admitted batch's bands to the index. */
   def append(spark: SparkSession, name: String, admittedDocs: DataFrame): Unit =
     appendBands(spark, name, bandsOfDocs(admittedDocs))
 
@@ -207,14 +149,7 @@ object BandIndex {
     */
   private[graft] def appendBands(spark: SparkSession, name: String,
       bands: DataFrame): Unit =
-    bands
-      .select(col("doc_id").as("hist_id"), col("band_idx"), col("band_key"))
-      .repartition(NumBuckets, col("band_idx"), col("band_key"))
-      .write.format("parquet")
-      .bucketBy(NumBuckets, "band_idx", "band_key")
-      .sortBy("band_idx", "band_key")
-      .mode("append")
-      .saveAsTable(name)
+    layout.append(spark, name, indexRows(bands))
 
   /** Ensure the history index for `dir` exists, is fresh, and is in this
     * session's catalog; returns the table name. Cost: a catalog lookup +
@@ -223,23 +158,12 @@ object BandIndex {
     */
   def ensure(spark: SparkSession, dir: String): String = synchronized {
     val name = tableNameFor(dir)
-    val path = indexPath(dir)
-    val fp = fingerprint(dir)
-    val validOnDisk = IndexCommit.fpValidOrRestored(path, fp)
-    if (spark.catalog.tableExists(name) && validOnDisk) name
-    else if (validOnDisk) { register(spark, name, path); name }
-    else {
-      val hist = docsWithBucket(spark, dir)
+    layout.ensure(spark, name, indexPath(dir), fingerprint(dir)) { (tn, tp) =>
+      buildIndex(spark, docsWithBucket(spark, dir)
         .filter(col("bucket") < BatchThreshold)
-        .select("doc_id", "text")
-      // build into a temp sibling + atomic publish ([[IndexCommit]]) so
-      // a concurrent process never observes a half-built index
-      IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-        buildIndex(spark, hist, tn, tp)
-      }
-      register(spark, name, path)
-      name
+        .select("doc_id", "text"), tn, tp)
     }
+    name
   }
 
   /** Probe `batchDocs` (doc_id, text — doc_id covering ALL batch docs,
@@ -264,7 +188,7 @@ object BandIndex {
       excludeBatchFromHistory: Boolean = false): DataFrame = {
     val (dec, bands) = probeIndexKeepBands(spark, name, batchDocs,
       excludeBatchFromHistory)
-    bands.unpersist()
+    Pins.release(bands)
     dec
   }
 
@@ -279,7 +203,8 @@ object BandIndex {
     * frame is eagerly pinned HERE, before any caller's append can
     * mutate the table it reads (q87's ordering rule, now enforced by
     * construction instead of by every call site). The CALLER owns the
-    * returned band pin and must unpersist it after the append.
+    * returned band pin and must release it ([[graft.core.Pins.release]])
+    * after the append.
     */
   private[graft] def probeIndexKeepBands(spark: SparkSession, name: String,
       batchDocs: DataFrame, excludeBatchFromHistory: Boolean = false)
@@ -331,22 +256,11 @@ object BandIndex {
       .orderBy("doc_id")
   }
 
-  /** An empty (doc_id, text) frame — [[initIndex]]'s history when an
-    * ingest stream starts from nothing.
-    */
-  def emptyDocs(spark: SparkSession): DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(StructField("doc_id", LongType),
-        StructField("text", StringType))))
-  }
-
   /** Create an EMPTY bucketed index (schema + bucket spec, no rows) —
     * the cold-start entry for a continuous ingest stream.
     */
   def initIndex(spark: SparkSession, name: String, path: Path): Unit =
-    buildIndex(spark, emptyDocs(spark), name, path)
+    layout.init(spark, name, path)
 
   /** q78's entry: ensure the persisted index for `dir`, then probe the
     * deterministic ~10% ingest slice (bucket ≥ [[BatchThreshold]])

@@ -37,9 +37,6 @@ import org.apache.spark.util.sketch.BloomFilter
   */
 object BloomIndex {
 
-  /** Deployment-tunable ([[IndexCommit.numBuckets]]). */
-  def NumBuckets: Int = IndexCommit.numBuckets
-
   def indexRoot: String = IndexCommit.indexRoot
 
   def tableNameFor(dir: String): String =
@@ -53,14 +50,9 @@ object BloomIndex {
     */
   @volatile private var bloomCache = Map.empty[(String, String), BloomFilter]
 
-  private def register(spark: SparkSession, name: String, path: Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    spark.sql(
-      s"""CREATE TABLE `$name` (sh STRING)
-         |USING PARQUET
-         |CLUSTERED BY (sh) SORTED BY (sh) INTO $NumBuckets BUCKETS
-         |LOCATION '${path.toString}'""".stripMargin)
-  }
+  /** Bucketed by `sh`, the confirm join's key. */
+  private val layout =
+    BucketedIndex("sh STRING", Seq("sh"), Seq("sh"), Seq("_BLOOM"))
 
   /** Ensure the benchmark index for `dir` exists, is fresh, and is in
     * this session's catalog; returns the table name. Warm cost: a
@@ -69,24 +61,10 @@ object BloomIndex {
     */
   def ensure(spark: SparkSession, dir: String): String = synchronized {
     val name = tableNameFor(dir)
-    val path = indexPath(dir)
-    val fp = BandIndex.fingerprint(dir)
-    val validOnDisk = IndexCommit.fpValidOrRestored(path, fp)
-    if (spark.catalog.tableExists(name) && validOnDisk) name
-    else if (validOnDisk) { register(spark, name, path); name }
-    else {
-      val (bench, _) = Dedup.decontamSides(spark, dir)
-      // build into a temp sibling + atomic publish ([[IndexCommit]]) so
-      // a concurrent process never observes a half-built index; table,
-      // _BLOOM sidecar, and fingerprint land together, the rename IS
-      // the commit marker
-      IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-        bench.repartition(NumBuckets, col("sh"))
-          .write.format("parquet")
-          .bucketBy(NumBuckets, "sh")
-          .sortBy("sh")
-          .option("path", tp.toString)
-          .saveAsTable(tn)
+    // table and _BLOOM sidecar land together in one publish
+    layout.ensure(spark, name, indexPath(dir), BandIndex.fingerprint(dir)) {
+      (tn, tp) =>
+        layout.write(spark, Dedup.decontamSides(spark, dir)._1, tn, tp)
         // bloom over the just-written table (one distributed aggregate);
         // sized from the table's row count — a metadata-cheap second job
         val n = spark.table(tn).count()
@@ -95,10 +73,8 @@ object BloomIndex {
         val bos = new java.io.ByteArrayOutputStream()
         bf.writeTo(bos)
         Lake.writeBytes(tp.resolve("_BLOOM").toString, bos.toByteArray)
-      }
-      register(spark, name, path)
-      name
     }
+    name
   }
 
   /** The persisted bloom for `dir` (ensure()d, cached per generation). */

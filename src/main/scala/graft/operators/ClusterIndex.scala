@@ -47,15 +47,12 @@ object ClusterIndex {
     IndexCommit.sourceFingerprint(dir, "embeddings.parquet") +
       ":" + Clustering.paramsTag + ":cent-v2"
 
-  private def register(spark: SparkSession, name: String, path: Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    spark.sql(
-      s"""CREATE TABLE `$name`
-         |  (vec_id BIGINT, cid BIGINT, v ARRAY<DOUBLE>, nrm DOUBLE)
-         |USING PARQUET
-         |CLUSTERED BY (cid) SORTED BY (cid, vec_id) INTO $NumBuckets BUCKETS
-         |LOCATION '${path.toString}'""".stripMargin)
-  }
+  /** Bucketed by `cid`, the within-cell pair join's key; compaction
+    * carries the frozen-cell `_CENTROIDS` sidecar.
+    */
+  private val layout = BucketedIndex(
+    "vec_id BIGINT, cid BIGINT, v ARRAY<DOUBLE>, nrm DOUBLE",
+    Seq("cid"), Seq("cid", "vec_id"), Seq("_CENTROIDS"))
 
   /** One ensure body for every modality's assignment index: warm cost
     * a catalog lookup + an O(#files) fingerprint check; cold cost one
@@ -72,26 +69,13 @@ object ClusterIndex {
   private def ensureModal(spark: SparkSession, name: String, fp: String,
       artifacts: => (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)): String =
     synchronized {
-      val path = Paths.get(indexRoot, name)
-      val validOnDisk = IndexCommit.fpValidOrRestored(path, fp)
-      if (spark.catalog.tableExists(name) && validOnDisk) name
-      else if (validOnDisk) { register(spark, name, path); name }
-      else {
-        IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-          val (cents, full) = artifacts
-          full
-            .repartition(NumBuckets, col("cid"))
-            .write.format("parquet")
-            .bucketBy(NumBuckets, "cid")
-            .sortBy("cid", "vec_id")
-            .option("path", tp.toString)
-            .saveAsTable(tn)
-          cents.coalesce(1).write.mode("overwrite")
-            .parquet(tp.resolve("_CENTROIDS").toString)
-        }
-        register(spark, name, path)
-        name
+      layout.ensure(spark, name, Paths.get(indexRoot, name), fp) { (tn, tp) =>
+        val (cents, full) = artifacts
+        layout.write(spark, full, tn, tp)
+        cents.coalesce(1).write.mode("overwrite")
+          .parquet(tp.resolve("_CENTROIDS").toString)
       }
+      name
     }
 
   /** Ensure the EMBEDDING assignment index for `dir` exists, is
@@ -175,105 +159,37 @@ object ClusterIndex {
     * beside [[ensure]]'s corpus-fingerprinted build.
     */
   def buildIndexFrame(spark: SparkSession, frame: org.apache.spark.sql.DataFrame,
-      name: String, path: Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    IndexCommit.deleteTree(path)
-    frame
-      .repartition(NumBuckets, col("cid"))
-      .write.format("parquet")
-      .bucketBy(NumBuckets, "cid")
-      .sortBy("cid", "vec_id")
-      .option("path", path.toString)
-      .saveAsTable(name)
-  }
+      name: String, path: Path): Unit =
+    layout.write(spark, frame, name, path)
 
   /** An EMPTY bucketed assignment index — the cold-start entry for a
     * continuous vector-ingest stream.
     */
-  def initIndex(spark: SparkSession, name: String, path: Path): Unit = {
-    import org.apache.spark.sql.types._
-    buildIndexFrame(spark,
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(Seq(
-          StructField("vec_id", LongType),
-          StructField("cid", LongType),
-          StructField("v", ArrayType(DoubleType)),
-          StructField("nrm", DoubleType)))),
-      name, path)
-  }
+  def initIndex(spark: SparkSession, name: String, path: Path): Unit =
+    layout.init(spark, name, path)
 
-  /** Append admitted rows; the bucketed-append writer validates the
-    * spec (register() declares the matching SORTED BY, the house
-    * restart regression).
-    */
+  /** Append admitted rows. */
   def append(spark: SparkSession, name: String,
       admitted: org.apache.spark.sql.DataFrame): Unit =
-    admitted.select("vec_id", "cid", "v", "nrm")
-      .repartition(NumBuckets, col("cid"))
-      .write.format("parquet")
-      .bucketBy(NumBuckets, "cid")
-      .sortBy("cid", "vec_id")
-      .mode("append")
-      .saveAsTable(name)
+    layout.append(spark, name, admitted.select("vec_id", "cid", "v", "nrm"))
 
   /** Fold away duplicate assignment rows (accrued by crash-replayed
     * appends — probes reduce through grouped-min so answers never
-    * change; duplicates only cost scan bytes, which in a long-running
-    * modal sink grow without bound). [[FpIndex.compact]]'s exact
-    * lifecycle applied to the vector estate: first compaction ADOPTS a
-    * marker-less sink index ([[IndexCommit.adoptUnmarked]]), the
-    * rewrite goes through the marker-bound retire-then-publish tail,
-    * and the `_CENTROIDS` sidecar (present on ensure-managed and
-    * history-seeded indexes; frozen cells, never relearned) is carried
-    * into the new tree. OWNER-ONLY, between batches — an append racing
-    * the rewrite is silently lost; see [[FpIndex.compact]]'s
-    * single-writer contract, which this compact shares. Returns
-    * (rows before, after).
+    * change; duplicates only cost scan bytes) through
+    * [[BucketedIndex.compact]], which carries the `_CENTROIDS` sidecar
+    * (present on ensure-managed and history-seeded indexes; frozen
+    * cells, never relearned) byte-identical into the new tree.
+    * OWNER-ONLY, between batches. Returns (rows before, after).
     */
-  def compact(spark: SparkSession, name: String, path: Path): (Long, Long) = {
-    val fp = IndexCommit.readFp(path).getOrElse {
-      val f = IndexCommit.sinkHistoryFp(name)
-      IndexCommit.adoptUnmarked(path, f)
-      f
-    }
-    val before = spark.table(name).count()
-    val rows = spark.table(name).distinct().localCheckpoint(true)
-    val sidecar = path.resolve("_CENTROIDS").toString
-    val cents =
-      if (graft.core.Lake.exists(sidecar))
-        Some(spark.read.parquet(sidecar).localCheckpoint(true))
-      else None
-    IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-      rows
-        .repartition(NumBuckets, col("cid"))
-        .write.format("parquet")
-        .bucketBy(NumBuckets, "cid")
-        .sortBy("cid", "vec_id")
-        .option("path", tp.toString)
-        .saveAsTable(tn)
-      cents.foreach(_.coalesce(1).write.mode("overwrite")
-        .parquet(tp.resolve("_CENTROIDS").toString))
-    }
-    register(spark, name, path)
-    val after = spark.table(name).count()
-    rows.unpersist()
-    cents.foreach(_.unpersist())
-    (before, after)
-  }
+  def compact(spark: SparkSession, name: String, path: Path): (Long, Long) =
+    layout.compact(spark, name, path)
 
   /** Post-crash recovery for a SINK-MANAGED assignment index (the
-    * image/audio/video dedup sinks' restart path) — restore a
-    * crash-stranded retiree over an unbound destination, then
-    * re-register; loud error when nothing adoptable survives. The
-    * policy body is [[IndexCommit.recoverSink]], SHARED with
-    * [[FpIndex.recover]]/[[BandIndex.recover]].
+    * image/audio/video dedup sinks' restart path) —
+    * [[BucketedIndex.recover]].
     */
-  def recover(spark: SparkSession, name: String, path: Path): Boolean = {
-    val restored = IndexCommit.recoverSink(path)
-    register(spark, name, path)
-    restored
-  }
+  def recover(spark: SparkSession, name: String, path: Path): Boolean =
+    layout.recover(spark, name, path)
 
   /** The persisted generation centroids ((cid, cv) integer micro-units)
     * of the ensure()-managed index for `dir` — K rows, broadcastable.

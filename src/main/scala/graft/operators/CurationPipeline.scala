@@ -864,8 +864,8 @@ object CurationPipeline {
     // pin the SMALL verdict result eagerly, then release the
     // model-sized artifact frames (bigram count table ∝ corpus vocab)
     // and the phase pins — a lazy return would hold them in the block
-    // manager until the consumer materializes (the FpIndex.compact
-    // unpersist discipline); the sink itself keeps its artifacts pinned
+    // manager until the consumer materializes (the BucketedIndex.compact
+    // release discipline); the sink itself keeps its artifacts pinned
     // for its LIFETIME by design, but a query run must not
     val out = p1.unionByName(p2)
       .select("batch_no", "doc_id", "n_spans", "n_chars_removed", "n_sh",

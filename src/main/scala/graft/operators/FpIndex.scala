@@ -52,12 +52,6 @@ import org.apache.spark.sql.functions._
   */
 object FpIndex {
 
-  /** Deployment-tunable ([[IndexCommit.numBuckets]]); default = the
-    * engine's shuffle-partition count at bench scale, so batch-side
-    * shuffles land exactly in the index's layout.
-    */
-  def NumBuckets: Int = IndexCommit.numBuckets
-
   def indexRoot: String = IndexCommit.indexRoot
 
   /** One index (table name + directory) per corpus directory. */
@@ -66,6 +60,10 @@ object FpIndex {
 
   private def indexPath(dir: String): Path =
     Paths.get(indexRoot, tableNameFor(dir))
+
+  /** Bucketed by `h`, the key every consumer joins or groups on. */
+  private val layout = BucketedIndex(
+    "doc_id BIGINT, pos BIGINT, h BIGINT", Seq("h"), Seq("h"), Nil)
 
   /** Freshness = source metadata + the winnow parameters baked into
     * every stored hash: an index built under an older hash scheme or
@@ -92,135 +90,41 @@ object FpIndex {
       col("doc_id")))
 
   /** Build the bucketed index over `docs` (doc_id, text) at `path`,
-    * registered as `name`. The pre-write `repartition` on `h` uses the
-    * same hash the bucketed writer assigns files by, so each task lands
-    * ~one bucket file.
+    * registered as `name`.
     */
   def buildIndex(spark: SparkSession, docs: DataFrame, name: String,
-      path: Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    IndexCommit.deleteTree(path)
-    fingerprintRows(docs)
-      .repartition(NumBuckets, col("h"))
-      .write.format("parquet")
-      .bucketBy(NumBuckets, "h")
-      .sortBy("h")
-      .option("path", path.toString)
-      .saveAsTable(name)
-  }
+      path: Path): Unit =
+    layout.write(spark, fingerprintRows(docs), name, path)
 
   /** Fold away duplicate fingerprint rows (legitimately accrued by
     * crash-replayed appends — see the duplicate-tolerance note in the
-    * class doc). The rewrite goes through [[IndexCommit.commitBuild]]:
-    * distinct rows eagerly pinned off the table's files, written into
-    * a temp sibling WITH the preserved fingerprint sidecar, published
-    * by one rename — a crash during the rewrite (where compaction
-    * spends its time) leaves the original index intact, and the
-    * publish tail RETIRES the original to a pid-scoped `.old-` sibling
-    * instead of deleting it ([[IndexCommit.publishMarked]]), so even a
-    * crash mid-publish never destroys the one copy of a sink-managed
-    * index's streaming history: the destination reads as stale (never
-    * torn bytes — the manifest-bound marker's guarantee) and the
-    * complete original survives in the retiree, which the janitor
-    * refuses to reclaim until the destination holds a bound marker
-    * again. At 100 TB a table format's atomic snapshot swap collapses
-    * the two renames into one commit; the discipline here is the same
-    * contract expressed with files.
-    *
-    * OWNER-ONLY, between batches: compaction snapshots the rows
-    * (distinct + pin) and REPLACES the tree, so an append racing it —
-    * landing files after the snapshot, into the tree about to be
-    * retired — would be silently lost by the rewrite. The publish
-    * protocol protects against concurrent COMPACTIONS (idempotent,
-    * loser discards) and against crashes; it cannot make append and
-    * replace commute. The sink that owns the index runs compaction
-    * between its own micro-batches (the single-writer contract every
-    * maintenance loop here already follows); cross-process
-    * compact-vs-append needs the table-format upgrade above. WHEN to
-    * compact is [[IndexCommit.appendedShare]]'s job — a metadata-only
-    * listing of the bytes appended since the last compaction, so the
-    * decision never pays a data scan.
-    * Compaction changes the layout, not which corpus the index covers.
-    * Returns (rows before, after).
+    * class doc) through [[BucketedIndex.compact]]'s retire-then-publish
+    * rewrite: a crash never destroys the one copy of a sink-managed
+    * index's streaming history. At 100 TB a table format's atomic
+    * snapshot swap collapses the two renames into one commit; the
+    * discipline here is the same contract expressed with files.
+    * OWNER-ONLY, between batches. Returns (rows before, after).
     */
-  def compact(spark: SparkSession, name: String, path: Path): (Long, Long) = {
-    // a sink-managed index starts life MARKER-LESS ([[initIndex]]/
-    // [[buildIndex]] write no marker — there is no source to
-    // fingerprint); without a synthesized identity the rewrite would
-    // fall into commitBuild's marker-less branch (delete-in-place,
-    // reserved for rebuildable pid-scoped scratch) and a crash in its
-    // window would destroy the one copy of the streaming history —
-    // the exact hazard the retire-then-publish tail exists to close.
-    // The first compaction also ADOPTS the live tree (marker bound in
-    // place, [[IndexCommit.adoptUnmarked]]) so the retiree it is about
-    // to create self-validates — restorable even if THIS compaction
-    // crashes mid-publish.
-    val fp = IndexCommit.readFp(path).getOrElse {
-      val f = IndexCommit.sinkHistoryFp(name)
-      IndexCommit.adoptUnmarked(path, f)
-      f
-    }
-    val before = spark.table(name).count()
-    val rows = spark.table(name).distinct().localCheckpoint(true)
-    IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-      rows
-        .repartition(NumBuckets, col("h"))
-        .write.format("parquet")
-        .bucketBy(NumBuckets, "h")
-        .sortBy("h")
-        .option("path", tp.toString)
-        .saveAsTable(tn)
-    }
-    register(spark, name, path)
-    val after = spark.table(name).count()
-    rows.unpersist()
-    (before, after)
-  }
+  def compact(spark: SparkSession, name: String, path: Path): (Long, Long) =
+    layout.compact(spark, name, path)
 
   /** Register an existing on-disk index into this session's catalog —
-    * the post-JVM-restart path. SORTED BY must match the writer's
-    * sortBy: append validates against the catalog's bucket spec, so a
-    * re-registered table without the sort columns would reject every
-    * subsequent [[append]] with a spec mismatch.
+    * the post-JVM-restart path.
     */
   private[operators] def register(spark: SparkSession, name: String,
-      path: Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    spark.sql(
-      s"""CREATE TABLE `$name` (doc_id BIGINT, pos BIGINT, h BIGINT)
-         |USING PARQUET
-         |CLUSTERED BY (h) SORTED BY (h) INTO $NumBuckets BUCKETS
-         |LOCATION '${path.toString}'""".stripMargin)
-  }
+      path: Path): Unit =
+    layout.register(spark, name, path)
 
   /** Post-crash recovery entry for a SINK-MANAGED index — the restart
     * path for a [[graft.streaming.WinnowIndexSink]]-style owner whose
-    * index has no `ensure()` and no rebuild source (the history IS the
-    * stream). Attempts [[IndexCommit.restoreRetiree]] first: a
-    * [[compact]] that crashed after retiring the live artifact leaves
-    * the destination unbound while the complete history sits in the
-    * `.old-<pid>` retiree, self-validating (the retire renames the
-    * whole destination, marker and nonce inside) — restoring it is one
-    * rename. `expectFp` is None: whatever complete generation survives
-    * IS the history. Then re-registers the table.
-    *
-    * Registering blind instead would put an absent or torn location
-    * behind the table name and every probe would silently readmit
-    * historical duplicates — so an unadoptable destination is a LOUD
-    * error ([[IndexCommit.recoverSink]], the ONE policy body shared
-    * with [[BandIndex.recover]]). Returns true iff a retiree was
+    * index has no `ensure()` and no rebuild source:
+    * [[BucketedIndex.recover]]. Returns true iff a retiree was
     * restored.
     */
-  def recover(spark: SparkSession, name: String, path: Path): Boolean = {
-    val restored = IndexCommit.recoverSink(path)
-    register(spark, name, path)
-    restored
-  }
+  def recover(spark: SparkSession, name: String, path: Path): Boolean =
+    layout.recover(spark, name, path)
 
-  /** Append an admitted batch's fingerprints to the index;
-    * `mode("append").bucketBy` validates the spec and writes
-    * bucket-id-named files, so probes still read the table bucketed.
-    */
+  /** Append an admitted batch's fingerprints to the index. */
   def append(spark: SparkSession, name: String, admittedDocs: DataFrame): Unit =
     appendRows(spark, name, fingerprintRows(admittedDocs))
 
@@ -240,13 +144,7 @@ object FpIndex {
       s"append() against the ensure()-managed corpus index `$name` — " +
         "maintenance/streaming appends must target their own index " +
         "(initIndex/buildIndex under a distinct name)")
-    fpRows
-      .repartition(NumBuckets, col("h"))
-      .write.format("parquet")
-      .bucketBy(NumBuckets, "h")
-      .sortBy("h")
-      .mode("append")
-      .saveAsTable(name)
+    layout.append(spark, name, fpRows)
   }
 
   /** Table names ensure() manages as build-once corpus indexes —
@@ -268,29 +166,19 @@ object FpIndex {
   def ensure(spark: SparkSession, dir: String): String = synchronized {
     val name = tableNameFor(dir)
     corpusTables.add(name)
-    val path = indexPath(dir)
-    val fp = fingerprint(dir)
-    val validOnDisk = IndexCommit.fpValidOrRestored(path, fp)
-    if (spark.catalog.tableExists(name) && validOnDisk) name
-    else if (validOnDisk) { register(spark, name, path); name }
-    else {
-      // build into a temp sibling + atomic publish ([[IndexCommit]]) so
-      // a concurrent process never observes a half-built index
-      IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-        buildIndex(spark,
-          graft.core.Tables(spark, dir, "documents").select("doc_id", "text"),
-          tn, tp)
-      }
-      register(spark, name, path)
-      name
+    layout.ensure(spark, name, indexPath(dir), fingerprint(dir)) { (tn, tp) =>
+      buildIndex(spark,
+        graft.core.Tables(spark, dir, "documents").select("doc_id", "text"),
+        tn, tp)
     }
+    name
   }
 
   /** Create an EMPTY bucketed index (schema + bucket spec, no rows) —
     * the cold-start entry for a continuous ingest stream.
     */
   def initIndex(spark: SparkSession, name: String, path: Path): Unit =
-    buildIndex(spark, BandIndex.emptyDocs(spark), name, path)
+    layout.init(spark, name, path)
 
   /** Probe `batchDocs` (doc_id, text) against the index: per batch doc,
     * the maximal duplicated-span ranges whose fingerprints already
@@ -321,7 +209,7 @@ object FpIndex {
       excludeBatchFromHistory: Boolean = false): DataFrame = {
     val (spans, bfp) = probeSpansKeepFp(spark, name, batchDocs,
       excludeBatchFromHistory)
-    bfp.unpersist()
+    graft.core.Pins.release(bfp)
     spans
   }
 
@@ -330,8 +218,8 @@ object FpIndex {
     * batch's fingerprints right after the probe ([[appendRows]]) — the
     * winnow is the batch's per-char decode cost and must be paid once,
     * not once per probe plus once per append. The CALLER owns the
-    * returned pin and must unpersist it after the append (the
-    * [[graft.streaming.MultimodalCurationSink]] pinned-handle rule).
+    * returned pin and must release it ([[graft.core.Pins.release]]) after
+    * the append.
     */
   private[graft] def probeSpansKeepFp(spark: SparkSession, name: String,
       batchDocs: DataFrame, excludeBatchFromHistory: Boolean = false)
@@ -339,7 +227,7 @@ object FpIndex {
     val bfp = fingerprintRows(batchDocs).localCheckpoint(true)
     // pin the SMALL spans result (duplicated ranges only) — a streaming
     // sink probing every micro-batch must not accrue batch-sized
-    // block-manager state per batch (the PostingsIndex.append unpersist
+    // block-manager state per batch (the PostingsIndex.append release
     // discipline). Eager evaluation here also severs the result's
     // dependency on the index table, so the caller's subsequent append
     // cannot perturb it.

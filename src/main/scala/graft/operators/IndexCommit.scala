@@ -7,8 +7,8 @@ import org.apache.spark.sql.SparkSession
 import graft.core.Lake
 
 /** Cross-process commit protocol + shared filesystem plumbing for the
-  * persisted index family ([[BandIndex]] / [[PostingsIndex]] /
-  * [[BloomIndex]] / [[FpIndex]] / [[ClusterIndex]]).
+  * persisted index families, whose one lifecycle is [[BucketedIndex]]
+  * (and for the lake-mode stage snapshots, [[CurationPipeline]]).
   *
   * `ensure()` is synchronized within one JVM, but two PROCESSES sharing
   * SPARK_GRAFT_INDEX_DIR could interleave a delete/saveAsTable/sidecar
@@ -46,8 +46,7 @@ object IndexCommit {
     sys.env.getOrElse("SPARK_GRAFT_INDEX_DIR", "/tmp/graft-band-index")
 
   /** Deployment-tunable bucket count shared by every persisted index
-    * ([[BandIndex]]/[[PostingsIndex]]/[[BloomIndex]]/[[FpIndex]]/
-    * [[ClusterIndex]]). Default 32 = local[32]'s shuffle-partition
+    * ([[BucketedIndex]]). Default 32 = local[32]'s shuffle-partition
     * count, so batch-side shuffles land exactly in the index layout; a
     * 1000-executor deployment sets `SPARK_GRAFT_INDEX_BUCKETS` to its
     * own parallelism — the primary scaling knob for index fan-in. The
@@ -99,7 +98,7 @@ object IndexCommit {
   private[graft] val DoneMarker = "_GRAFT_DONE"
 
   /** The fingerprint a SINK-MANAGED index (streaming history with no
-    * source to fingerprint — [[FpIndex.compact]]/[[BandIndex.compact]])
+    * source to fingerprint — [[BucketedIndex.compact]])
     * publishes its compactions under. Deterministic per table name so
     * two concurrent compactors of the same index read as the same
     * generation (the benign-loser rule); the value never gates
@@ -176,7 +175,7 @@ object IndexCommit {
     * marker exists (marker written LAST — a missing marker means "no
     * artifact", whatever files exist). Fingerprint ONLY: manifest and
     * nonce lines are [[markedValid]]'s concern, so callers that thread
-    * a fingerprint into a rebuild ([[graft.operators.FpIndex.compact]])
+    * a fingerprint into a rebuild ([[BucketedIndex.compact]])
     * re-publish under a FRESH manifest, never a stale one.
     */
   private[graft] def readFp(path: Path): Option[String] =
@@ -377,10 +376,9 @@ object IndexCommit {
     }
   }
 
-  /** The SINK-MANAGED index recovery policy — ONE body shared by
-    * [[FpIndex.recover]] and [[BandIndex.recover]] (each re-registers
-    * its own table schema afterwards), so the two families' restart
-    * semantics cannot drift. Attempts [[restoreRetiree]] (`expectFp`
+  /** The SINK-MANAGED index recovery policy, called only by
+    * [[BucketedIndex.recover]] (which re-registers the table
+    * afterwards), so no family's restart semantics can drift. Attempts [[restoreRetiree]] (`expectFp`
     * None: whatever complete generation survives IS the history), then
     * demands the destination be ADOPTABLE: bound, or marker-less WITH
     * data and NO surviving retiree (a never-compacted index legally
@@ -416,7 +414,7 @@ object IndexCommit {
     * retire-then-publish tail protects the pre-rewrite artifact by
     * keeping it as a retiree, but a retiree self-validates through the
     * marker INSIDE it, and a never-compacted sink index has none
-    * (initIndex/buildIndex write no marker — there is no source to
+    * ([[BucketedIndex.init]]/[[BucketedIndex.write]] write no marker — there is no source to
     * fingerprint): its first compaction's crash would strand a
     * complete but unverifiable retiree that [[restoreRetiree]] rightly
     * refuses. Adoption writes nonce + manifest + marker against the
@@ -521,7 +519,7 @@ object IndexCommit {
     *     destination is only ever absent, the old artifact, or the
     *     new one, and the old artifact survives the whole publish
     *     tail as the RESTORE SOURCE for artifacts with no rebuild
-    *     path ([[graft.operators.FpIndex.compact]]'s sink-managed
+    *     path ([[BucketedIndex.compact]]'s sink-managed
     *     indexes). On a copy+delete store a crash mid-retire leaves
     *     the current artifact intact (the copy completes before the
     *     delete begins); a crash during the retire's DELETE phase is

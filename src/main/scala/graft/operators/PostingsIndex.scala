@@ -5,7 +5,7 @@ import java.nio.file.{Path, Paths}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Lake, Tables}
+import graft.core.{Lake, Pins, Tables}
 
 /** Persisted, BUCKETED inverted index for BM25 — the [[BandIndex]]
   * pattern applied to lexical retrieval.
@@ -38,6 +38,13 @@ import graft.core.{Lake, Tables}
 object PostingsIndex {
 
   def NumBuckets: Int = IndexCommit.numBuckets
+
+  /** Bucketed by the single column `term`, so a literal `term IN (...)`
+    * prunes buckets; compaction carries the versioned `_sidecar` estate.
+    */
+  private val layout = BucketedIndex(
+    "term STRING, doc_id BIGINT, tf BIGINT, dl INT",
+    Seq("term"), Seq("term"), Seq("_sidecar"))
 
   def indexRoot: String =
     sys.env.getOrElse("SPARK_GRAFT_POSTINGS_DIR", "/tmp/graft-postings-index")
@@ -126,19 +133,12 @@ object PostingsIndex {
     */
   def buildIndexDocs(spark: SparkSession, docs: DataFrame, name: String,
       path: Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    IndexCommit.deleteTree(path)
     val p = postingsOfDocs(docs).localCheckpoint(true)
-    p.repartition(NumBuckets, col("term"))
-      .write.format("parquet")
-      .bucketBy(NumBuckets, "term")
-      .sortBy("term")
-      .option("path", path.toString)
-      .saveAsTable(name)
+    layout.write(spark, p, name, path)
     val (n, sumDl) = statsOfDocs(docs, p)
     writeSidecar(spark, path, 0L,
       p.groupBy("term").agg(count(lit(1)).as("df")), n, sumDl)
-    p.unpersist()
+    Pins.release(p)
   }
 
   /** Build from the corpus under `dir` (q91's entry). */
@@ -147,21 +147,13 @@ object PostingsIndex {
     buildIndexDocs(spark,
       Tables(spark, dir, "documents").select("doc_id", "text"), name, path)
 
-  private def writePostingsAppend(postings: DataFrame, name: String): Unit =
-    postings.repartition(NumBuckets, col("term"))
-      .write.format("parquet")
-      .bucketBy(NumBuckets, "term")
-      .sortBy("term")
-      .mode("append")
-      .saveAsTable(name)
-
   /** The postings-file half of [[append]] for a (doc_id, text) batch —
     * exposed so the streaming spec can simulate the crash window
     * between the postings append and the sidecar commit.
     */
   private[graft] def appendPostingsOnly(spark: SparkSession, name: String,
       newDocs: DataFrame): Unit =
-    writePostingsAppend(postingsOfDocs(newDocs), name)
+    layout.append(spark, name, postingsOfDocs(newDocs))
 
   /** Admit a batch into the index: postings appended through the
     * bucketed writer (layout preserved), then sidecar version old+1
@@ -179,7 +171,7 @@ object PostingsIndex {
     val v = toVersion.getOrElse(sidecarVersion(path) + 1)
     val base = v - 1
     val p = postingsOfDocs(newDocs).localCheckpoint(true)
-    writePostingsAppend(p, name)
+    layout.append(spark, name, p)
     val merged = spark.read
       .parquet(sidecarDir(path, base).resolve("dfreq").toString)
       .unionByName(p.groupBy("term").agg(count(lit(1)).as("df")))
@@ -188,8 +180,8 @@ object PostingsIndex {
     val (bn, bDl) = statsOfDocs(newDocs, p)
     val (n0, dl0) = readMeta(path, base)
     writeSidecar(spark, path, v, merged, n0 + bn, dl0 + bDl)
-    merged.unpersist()
-    p.unpersist()
+    Pins.release(merged)
+    Pins.release(p)
   }
 
   /** Fold away whole-duplicate postings rows (the at-least-once
@@ -197,64 +189,24 @@ object PostingsIndex {
     * write and its sidecar commit leaves the replayed batch's rows
     * twice; reads are row-DISTINCT so scores never move — the bytes
     * remain, and in a long-running serving index grow without bound).
-    * [[FpIndex.compact]]'s lifecycle applied to the retrieval estate:
-    * first compaction ADOPTS a marker-less sink index
-    * ([[IndexCommit.adoptUnmarked]]), the rewrite goes through the
-    * marker-bound retire-then-publish tail, and the VERSIONED df/meta
-    * sidecar estate (`path/_sidecar`: slots + pointer — history the
-    * replay protocol depends on, not derived data) is carried
-    * byte-identical into the new tree ([[graft.core.Lake.copyTree]];
-    * the mutable `_LATEST` pointer is manifest-exempt by the marker
-    * protocol, so later pointer advances never stale the artifact).
-    * OWNER-ONLY, between batches — [[FpIndex.compact]]'s single-writer
-    * contract, which this compact shares. Returns (rows before, after).
+    * [[BucketedIndex.compact]] carries the VERSIONED df/meta sidecar
+    * estate (`path/_sidecar`: slots + pointer — history the replay
+    * protocol depends on, not derived data) byte-identical into the
+    * new tree. OWNER-ONLY, between batches. Returns (rows before,
+    * after).
     */
-  def compact(spark: SparkSession, name: String, path: Path): (Long, Long) = {
-    val fp = IndexCommit.readFp(path).getOrElse {
-      val f = IndexCommit.sinkHistoryFp(name)
-      IndexCommit.adoptUnmarked(path, f)
-      f
-    }
-    val before = spark.table(name).count()
-    val rows = spark.table(name).distinct().localCheckpoint(true)
-    IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-      rows
-        .repartition(NumBuckets, col("term"))
-        .write.format("parquet")
-        .bucketBy(NumBuckets, "term")
-        .sortBy("term")
-        .option("path", tp.toString)
-        .saveAsTable(tn)
-      Lake.copyTree(path.resolve("_sidecar").toString,
-        tp.resolve("_sidecar").toString)
-    }
-    register(spark, name, path)
-    val after = spark.table(name).count()
-    rows.unpersist()
-    (before, after)
-  }
+  def compact(spark: SparkSession, name: String, path: Path): (Long, Long) =
+    layout.compact(spark, name, path)
 
   /** Post-crash recovery for a SINK-MANAGED postings index (the
-    * retrieval/serving sinks' restart path) — restore a crash-stranded
-    * retiree, then re-register; loud error when nothing adoptable
-    * survives. The policy body is [[IndexCommit.recoverSink]], SHARED
-    * with the other three index families.
+    * retrieval/serving sinks' restart path) — [[BucketedIndex.recover]].
     */
-  def recover(spark: SparkSession, name: String, path: Path): Boolean = {
-    val restored = IndexCommit.recoverSink(path)
-    register(spark, name, path)
-    restored
-  }
+  def recover(spark: SparkSession, name: String, path: Path): Boolean =
+    layout.recover(spark, name, path)
 
   private[operators] def register(spark: SparkSession, name: String,
-      path: Path): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS `$name`")
-    spark.sql(
-      s"""CREATE TABLE `$name` (term STRING, doc_id BIGINT, tf BIGINT, dl INT)
-         |USING PARQUET
-         |CLUSTERED BY (term) SORTED BY (term) INTO $NumBuckets BUCKETS
-         |LOCATION '${path.toString}'""".stripMargin)
-  }
+      path: Path): Unit =
+    layout.register(spark, name, path)
 
   /** Ensure the postings index for `dir` is fresh and in this session's
     * catalog; returns (table name, n_docs, sum_dl). Warm cost: catalog
@@ -268,18 +220,9 @@ object PostingsIndex {
       // the layout tag makes an on-disk index from an older sidecar
       // layout read as stale (rebuild), not as a read error
       val fp = BandIndex.fingerprint(dir) + ":sidecar-v3"
-      val validOnDisk = IndexCommit.fpValidOrRestored(path, fp)
-      if (!validOnDisk) {
-        // build into a temp sibling + atomic publish ([[IndexCommit]]):
-        // postings table AND sidecar v=0 land together, the rename is
-        // the commit, so a concurrent process never observes a
-        // half-built index
-        IndexCommit.commitBuild(spark, name, path, Some(fp)) { (tn, tp) =>
-          buildIndex(spark, dir, tn, tp)
-        }
-        register(spark, name, path)
-      } else if (!spark.catalog.tableExists(name)) {
-        register(spark, name, path)
+      // postings table AND sidecar v=0 land together in one publish
+      layout.ensure(spark, name, path, fp) { (tn, tp) =>
+        buildIndex(spark, dir, tn, tp)
       }
       val (n, sumDl) = readMeta(path, sidecarVersion(path))
       (name, n, sumDl)

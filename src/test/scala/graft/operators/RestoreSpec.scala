@@ -36,6 +36,18 @@ class RestoreSpec extends SparkSpec {
   private def deadPid: Long = Iterator.iterate(3999999999L)(_ - 7)
     .find(p => !ProcessHandle.of(p).isPresent).get
 
+  /** Run a compaction and assert it releases every block it pinned:
+    * the persistent-RDD key set after it returns is a subset of the
+    * set before it (no GC wait — a release is synchronous).
+    */
+  private def releasesPins[T](compaction: => T): T = {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val out = compaction
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(leaked.isEmpty, s"compaction left persistent RDDs $leaked pinned")
+    out
+  }
+
   test("a crash-stranded retiree restores over the unbound destination: one rename, exact tree, dead-owner and generation gates") {
     val root = tornDir("graft-restore")
     val dst = Paths.get(root.stripPrefix("torn:"), "artifact")
@@ -130,7 +142,7 @@ class RestoreSpec extends SparkSpec {
       // the hole, closed: compaction must synthesize a marker identity
       // and publish through the retire tail — a marker-less rewrite
       // would delete the one copy of the history in place
-      FpIndex.compact(spark, name, tornPath)
+      releasesPins(FpIndex.compact(spark, name, tornPath))
       assert(IndexCommit.readFp(tornPath)
           .contains(IndexCommit.sinkHistoryFp(name)),
         "compaction of a marker-less index must publish marker-bound")
@@ -231,7 +243,7 @@ class RestoreSpec extends SparkSpec {
       val want = probeRows()
       assert(want.nonEmpty, "exact-duplicate arrivals must hit history")
 
-      BandIndex.compact(spark, name, tornPath)
+      releasesPins(BandIndex.compact(spark, name, tornPath))
       assert(IndexCommit.readFp(tornPath)
           .contains(IndexCommit.sinkHistoryFp(name)))
       assert(probeRows() == want)
@@ -279,7 +291,8 @@ class RestoreSpec extends SparkSpec {
           array(lit(0.0), lit(1.0)).as("cv"))
         .coalesce(1).write.parquet(s"torn:${path.toString}/_CENTROIDS")
 
-      val (before, after) = ClusterIndex.compact(spark, name, tornPath)
+      val (before, after) =
+        releasesPins(ClusterIndex.compact(spark, name, tornPath))
       assert(before == 80L && after == 40L,
         "compaction must fold exactly the duplicated rows")
       assert(IndexCommit.readFp(tornPath)
@@ -343,7 +356,8 @@ class RestoreSpec extends SparkSpec {
       assert(c2 - c1 == c1 - c0, "the replay must duplicate exactly the batch")
       assert(PostingsIndex.sidecarVersion(tornPath) == 1L)
 
-      val (before, after) = PostingsIndex.compact(spark, name, tornPath)
+      val (before, after) =
+        releasesPins(PostingsIndex.compact(spark, name, tornPath))
       assert(before == c2 && after == c1,
         "compaction must fold exactly the duplicate copy")
       assert(IndexCommit.readFp(tornPath)
